@@ -69,6 +69,11 @@ object Bench {
     // for every steady-state query.
     val priced = graft.queries.Queries.priced
     val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
+    // A rep that throws is not a sample: its wall-clock up to the throw
+    // would read as a fast query (a broken query as a speed-up). It is
+    // listed on stderr and under `failed` in the bench file instead; a
+    // query with no successful rep drops out of the line.
+    val failed = scala.collection.mutable.ArrayBuffer.empty[(String, Int, String)]
     for (rep <- 1 to reps; (name, fn) <- queries
          if rep <= 2 || !priced(name)) {
       // Collect the PREVIOUS query's garbage before starting the clock:
@@ -79,9 +84,15 @@ object Bench {
       // SPARK_GRAFT_GC=0 disables (A/B attribution knob).
       if (sys.env.getOrElse("SPARK_GRAFT_GC", "1") != "0") System.gc()
       val t0 = System.nanoTime()
-      try run(fn(spark, sfDir)) catch { case _: Throwable => () }
-      val t = (System.nanoTime() - t0) / 1e9
-      samples.updateWith(name)(prev => Some(t :: prev.getOrElse(Nil)))
+      try {
+        run(fn(spark, sfDir))
+        val t = (System.nanoTime() - t0) / 1e9
+        samples.updateWith(name)(prev => Some(t :: prev.getOrElse(Nil)))
+      } catch {
+        case e: Throwable =>
+          failed += ((name, rep, e.getClass.getName))
+          System.err.println(s"[bench] FAILED $name rep $rep: ${e.getClass.getName}: ${e.getMessage}")
+      }
     }
     // linear-interpolated quantile over the sorted reps: with the default
     // 3 reps this reads (min, median, max) — exactly the spread that
@@ -117,8 +128,11 @@ object Bench {
         s"\"p75\":${quantile(sorted, 0.75)}}"
     }.mkString("{", ",", "}")
     val pricedRan = queries.keys.filter(priced).map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map { case (name, rep, cls) =>
+      s"""{"name":"$name","rep":$rep,"error":"$cls"}"""
+    }.mkString("[", ",", "]")
     val fileLine = line.dropRight(1) +
-      s""","reps":$reps,"priced_min_of_2":$pricedRan,"quantiles":$spread}"""
+      s""","reps":$reps,"priced_min_of_2":$pricedRan,"quantiles":$spread,"failed":$failedJson}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")),
       (fileLine + "\n").getBytes("UTF-8"))

@@ -96,6 +96,21 @@ final class MemoryBus(val spark: SparkSession) extends Bus {
       MemoryStream[PublishedEvent](implicitly[org.apache.spark.sql.Encoder[PublishedEvent]],
         spark.sqlContext))
 
+  /** Per-topic append monitors. `MemoryStream.addData` encodes rows with
+    * ONE serializer shared by the stream and only takes the stream's own
+    * lock after encoding, so two threads appending to a topic at once
+    * (the sink's task threads closing their partitions together) corrupt
+    * each other's rows ("Invalid byte array backed UnsafeRow"). A
+    * separate monitor, not the stream's, so an append never blocks the
+    * micro-batch thread reading offsets.
+    */
+  private val appendLocks = scala.collection.concurrent.TrieMap.empty[String, AnyRef]
+
+  private def append(topic: String, events: Seq[PublishedEvent]): Unit = {
+    val stream = streamFor(topic)
+    appendLocks.getOrElseUpdate(topic, new Object).synchronized(stream.addData(events))
+  }
+
   def publish[T](events: Seq[T], key: Option[T => String] = None)
                 (implicit enc: Encoder[T]): Unit = {
     val fqn = EnvelopeCodec.fqnOf[T]
@@ -109,11 +124,11 @@ final class MemoryBus(val spark: SparkSession) extends Bus {
           occurredAt = new java.sql.Timestamp(System.currentTimeMillis())),
         payload = payload)
     }
-    streamFor(fqn).addData(envs)
+    append(fqn, envs)
   }
 
   def publishEnvelopes(topic: String, events: Seq[PublishedEvent]): Unit =
-    streamFor(topic).addData(events)
+    append(topic, events)
 
   def source(topic: String): DataFrame = streamFor(topic).toDF()
 

@@ -58,8 +58,8 @@ object CorpusIO {
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").orc(path)
 
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
+  def readOrc(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).orc(path)
 
   /** Partitioned parquet writer with bounded file sizes: the at-rest
     * layout of a curated corpus (`path/partitionCol=v/part-*.parquet`,
@@ -151,7 +151,7 @@ object CorpusIO {
       }
     }
     val nAfter = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read.parquet(inPath)
+    val df = Tables.read(spark, inPath)
     val out = sortCol.fold(df.repartition(nAfter))(c =>
       df.repartitionByRange(nAfter, col(c)))
     out.write.mode("overwrite").parquet(outPath)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.entity.EntityStore
-import graft.ops.{Dedup, Multimodal, Pq, Similarity, TextAnalysis}
+import graft.ops.{Dedup, Multimodal, Pq, Similarity, Tables, TextAnalysis}
 import graft.rpc.Rpc
 import graft.service.{RetryBackoff, RetryPolicy}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -34,24 +34,30 @@ final case class QueryDef(name: String,
   */
 object Queries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+  /** Table `name` of the scale-factor dir, through the schema catalog
+    * ([[graft.ops.Tables.read]]): the parquet schema is inferred once
+    * per data fingerprint and conf state, so building a query over it
+    * runs no Spark job. `events` gets one more step. The generator's ts
+    * encoding has varied across rounds: INT64 TIMESTAMP(NANOS), which
+    * Spark rejects outright without nanosAsLong (PARQUET_TYPE_ILLEGAL),
+    * vs plain TIMESTAMP(MICROS), read as TIMESTAMP_NTZ. The catalogued
+    * schema says which one the files hold, and both are normalized to a
+    * session-TZ TIMESTAMP so every downstream query sees one shape; with
+    * the UTC session both rebuilds are value-identical to DuckDB's
+    * native read. A file rewritten in the other encoding changes the
+    * fingerprint, so the sniff never reads a stale schema.
+    */
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
-      // The generator's ts encoding has varied across rounds: INT64
-      // TIMESTAMP(NANOS) (which Spark rejects outright without
-      // nanosAsLong — PARQUET_TYPE_ILLEGAL) vs plain TIMESTAMP(MICROS)
-      // (read as TIMESTAMP_NTZ). Normalize both to a session-TZ
-      // TIMESTAMP so every downstream query sees one shape; with the
-      // UTC session both rebuilds are value-identical to DuckDB's
-      // native read.
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/events.parquet")
+      val raw = Tables.read(s, s"$dir/events.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           // nanos-as-long; generator precision is µs so div 1000 is lossless
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
       }
-    } else s.read.parquet(s"$dir/$name.parquet")
+    } else Tables.read(s, s"$dir/$name.parquet")
 
   // TPC-H date columns are TIMESTAMP_NTZ in the testdata; unix_millis
   // needs TIMESTAMP — under the UTC session the cast is value-identical
@@ -103,7 +109,7 @@ object Queries {
       Similarity.kmeansCentroids(corpus, idCol, vecCol, n, iters)
         .write.mode("overwrite").parquet(s"$path/cent")
     }
-    s.read.parquet(s"$path/cent")
+    Tables.read(s, s"$path/cent")
   }
 
   /** First-touch persisted media payloads: planted PNG/WAV/GIF bytes are
@@ -136,7 +142,7 @@ object Queries {
       }
       media.write.mode("overwrite").parquet(s"$path/media")
     }
-    s.read.parquet(s"$path/media")
+    Tables.read(s, s"$path/media")
   }
 
   /** Shared oracle for BOTH curation-manifest variants (identical
@@ -4483,7 +4489,7 @@ object Queries {
           Dedup.bandTable(prior, "doc_id", "text").write
             .mode("overwrite").parquet(s"$path/bands")
         }
-        val priorBands = s.read.parquet(s"$path/bands")
+        val priorBands = Tables.read(s, s"$path/bands")
         val recrawl = docs.where(col("doc_id") >= 50 && col("doc_id") < 53)
           .select((col("doc_id") + 300000).as("doc_id"),
             concat(col("text"), lit(" appended crawl tail")).as("text"))
@@ -5634,7 +5640,8 @@ object Queries {
         // files and 18s of committer overhead vs ~2s at 100k rows/file —
         // the small-files explosion the operator doc warns about
         graft.ops.CorpusIO.writeSharded(docs, out, "lang", maxRecordsPerFile = 100000)
-        graft.ops.CorpusIO.checksum(s.read.parquet(out), "lang", "doc_id", "text")
+        graft.ops.CorpusIO.checksum(s.read.schema(docs.schema).parquet(out),
+          "lang", "doc_id", "text")
       },
       Some(graft.ops.CorpusIO.checksumSql("documents", "lang", "doc_id", "text"))),
 
@@ -5645,7 +5652,7 @@ object Queries {
         val docs = t(s, dir, "documents")
         val out = s"${System.getProperty("java.io.tmpdir")}/graft_io_orc_${math.abs(dir.hashCode)}"
         graft.ops.CorpusIO.writeOrc(docs, out)
-        graft.ops.CorpusIO.checksum(graft.ops.CorpusIO.readOrc(s, out),
+        graft.ops.CorpusIO.checksum(graft.ops.CorpusIO.readOrc(s, out, docs.schema),
           "source", "doc_id", "text")
       },
       Some(graft.ops.CorpusIO.checksumSql("documents", "source", "doc_id", "text"))),
@@ -5665,7 +5672,8 @@ object Queries {
         docs.repartition(32).write.mode("overwrite").parquet(frag)
         graft.ops.CorpusIO.compact(s, frag, out,
           targetBytes = 4 * 1024 * 1024, sortCol = Some("doc_id"))
-        graft.ops.CorpusIO.checksum(s.read.parquet(out), "source", "doc_id", "text")
+        graft.ops.CorpusIO.checksum(s.read.schema(docs.schema).parquet(out),
+          "source", "doc_id", "text")
       },
       Some(graft.ops.CorpusIO.checksumSql("documents", "source", "doc_id", "text"))),
 
@@ -5712,7 +5720,7 @@ object Queries {
         val ev = t(s, dir, "events")
         val out = s"${System.getProperty("java.io.tmpdir")}/graft_io_zorder_${math.abs(dir.hashCode)}"
         graft.ops.CorpusIO.zorderWrite(s, ev, out, "user_id", "event_id", nFiles = 16)
-        graft.ops.CorpusIO.checksum(s.read.parquet(out),
+        graft.ops.CorpusIO.checksum(s.read.schema(ev.schema).parquet(out),
           "event_type", "event_id", "props")
       },
       Some(graft.ops.CorpusIO.checksumSql("events", "event_type", "event_id", "props"))),

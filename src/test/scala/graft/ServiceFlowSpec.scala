@@ -102,4 +102,53 @@ class ServiceFlowSpec extends SparkSpec {
       assert(rows.toSeq === Seq(("q-1", """{"userId":"u2","total":2.0}""")))
     } finally queries.foreach(_.stop())
   }
+
+  test("concurrent appends to one topic decode intact and keep each thread's order") {
+    // the MemoryBus sink's shape: several task threads closing their
+    // partitions at once, each appending its buffer to the same topic
+    val bus = new MemoryBus(spark)
+    val topic = "concurrent-appends"
+    val (threads, appends, perAppend) = (8, 40, 5)
+    def id(th: Int, seq: Int): String = f"t$th%d-$seq%05d"
+    // payload lengths vary row to row, so a row encoded into another
+    // row's buffer cannot decode as itself
+    def payload(th: Int, seq: Int): String = id(th, seq) + "|" + "x" * ((th * 31 + seq) % 97)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val done = (0 until threads).map { th =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            start.await()
+            for (a <- 0 until appends)
+              bus.publishEnvelopes(topic, (0 until perAppend).map { i =>
+                val seq = a * perAppend + i
+                PublishedEvent(EventMeta(eventId = id(th, seq), eventType = topic,
+                  occurredAt = new java.sql.Timestamp(seq.toLong)),
+                  payload(th, seq).getBytes("UTF-8"))
+              })
+          }
+        })
+      }
+      start.countDown()
+      done.foreach(_.get())
+    } finally pool.shutdown()
+
+    val q = bus.source(topic).writeStream.format("memory")
+      .queryName("concurrent_appends").outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      val rows = spark.table("concurrent_appends")
+        .select($"meta.eventId", $"meta.occurredAt", $"payload".cast("string"))
+        .as[(String, java.sql.Timestamp, String)].collect().toSeq
+      assert(rows.size === threads * appends * perAppend)
+      val byThread = rows.groupBy(_._1.takeWhile(_ != '-'))
+      assert(byThread.keySet === (0 until threads).map(th => s"t$th").toSet)
+      for (th <- 0 until threads) {
+        val expected = (0 until appends * perAppend)
+          .map(seq => (id(th, seq), new java.sql.Timestamp(seq.toLong), payload(th, seq)))
+        assert(byThread(s"t$th") === expected, s"thread $th's rows")
+      }
+    } finally q.stop()
+  }
 }
